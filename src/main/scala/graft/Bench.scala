@@ -3,7 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // 1-minute load average sampled BEFORE this JVM ramps up: residual
     // machine load inflates bench numbers ~1.5x (see CLAUDE.md), so the
     // artifact must carry the evidence needed to judge its own validity
@@ -109,14 +110,14 @@ object Bench {
       // never OOMs). Verify DOES clear per query — correctness runs feed
       // no timing, so hygiene there is free. For subsidy-free per-query
       // cost, QueryTimer clears between reps.
-      // drain the managed cleanup handles the query's lambda registered
-      // (QueryCleanup) AFTER its reps: within-query reps still reuse the
+      // drain the per-call persists the query's lambda registered
+      // (SessionScope) AFTER its reps: within-query reps still reuse the
       // cached frames (identical plans plan-match, preserving rep
       // comparability with earlier records), but a managed query's
       // per-call persists no longer outlive it into the rest of the
       // sweep bounded only by LRU pressure (r18 ADVICE). Untimed: the
       // unpersist is non-blocking bookkeeping, not query cost.
-      graft.core.QueryCleanup.drain(spark)
+      graft.core.SessionScope.drain(spark)
       // wall-min and cpu-min may come from different reps: each is the
       // least-polluted observation of its own metric (noise only adds)
       val wall = if (times.exists(_._1 < 0)) -1.0 else times.map(_._1).min

@@ -12,7 +12,8 @@ object Verify {
     val only: Set[String] = args.drop(2).headOption
       .map(_.split(",").toSet).getOrElse(Set.empty)
     def keep(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -33,11 +34,11 @@ object Verify {
       // accumulate across the 100+-query sweep and squeeze later queries'
       // execution memory. Queries are independent, so clearing between
       // them is safe and also prevents accidental cross-query cached-plan
-      // reuse from masking a query's real cost. The drain runs the
-      // managed cleanup handles the lambda registered (QueryCleanup) —
+      // reuse from masking a query's real cost. The drain releases the
+      // per-call persists the lambda registered (SessionScope) —
       // here mostly to keep the registry itself from growing across the
       // sweep; clearCache already reclaims the blocks.
-      graft.core.QueryCleanup.drain(spark)
+      graft.core.SessionScope.drain(spark)
       spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

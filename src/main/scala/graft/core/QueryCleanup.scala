@@ -2,53 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-session registry of deferred cleanup handles for catalog queries.
-  *
-  * The `*Managed` factorings in [[graft.ext.TextAnalysis]] return
-  * `(DataFrame, () => Unit)` — the frame plus a handle that unpersists
-  * the per-call intermediate frames once the caller has materialized the
-  * result. Serving twins invoke the handle inline per micro-batch, but a
-  * CATALOG lambda (`SparkEntry.queries`) can only return the DataFrame:
-  * the driver materializes it later, so the lambda cannot know when
-  * cleanup is safe. Registering the handle here defers it to the RUNNER:
-  *
-  *  - `Verify` drains after each query (belt and braces — its per-query
-  *    `clearCache` already reclaims the blocks; the drain keeps this
-  *    registry itself from growing across the 190+-query sweep);
-  *  - `Bench` drains after each query's reps (the r18 ADVICE: its
-  *    measured no-clear mode otherwise leaves each managed query's
-  *    persisted intermediates behind, bounded only by LRU eviction);
-  *  - `QueryTimer` / `CpuProbe` drain per rep / per query to mirror.
-  *
-  * Handles must be idempotent and safe after `clearCache` (unpersist of
-  * an already-unpersisted frame is a no-op — every registered handle is
-  * a chain of `unpersist(false)` calls). Registration and drain are
-  * expected from the single catalog-runner thread; concurrent REGISTERS
-  * are safe (the buffer is synchronized), but a register racing a drain
-  * may land on a buffer the drain already detached and run only at the
-  * next drain — acceptable for runner-sequenced workloads.
-  */
+/** Kept only because the benchmark's catalog runner
+  * (`perfbench/src/perfbench/Catalog.scala`) calls it and those files
+  * change only with the benchmark; everything else calls
+  * [[SessionScope.drain]]. */
 object QueryCleanup {
-  private val pending = scala.collection.concurrent.TrieMap[
-    SparkSession, scala.collection.mutable.ArrayBuffer[() => Unit]]()
-
-  /** Defer `f` until the runner's next [[drain]] for this session. */
-  def register(s: SparkSession, f: () => Unit): Unit = {
-    val fresh = scala.collection.mutable.ArrayBuffer[() => Unit]()
-    val buf = pending.putIfAbsent(s, fresh).getOrElse(fresh)
-    buf.synchronized { buf += f }
-    ()
-  }
-
-  /** Run and discard every handle registered for `s`; returns how many
-    * ran. Handle failures are swallowed — cleanup must never fail the
-    * query whose result already materialized. */
-  def drain(s: SparkSession): Int =
-    pending.remove(s) match {
-      case Some(buf) =>
-        val fs = buf.synchronized { val c = buf.toList; buf.clear(); c }
-        fs.foreach(f => try f() catch { case _: Throwable => () })
-        fs.size
-      case None => 0
-    }
+  def drain(s: SparkSession): Int = SessionScope.drain(s)
 }

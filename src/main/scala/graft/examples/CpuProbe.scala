@@ -32,7 +32,8 @@ object CpuProbe {
     }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -59,8 +60,8 @@ object CpuProbe {
         // a -1 cpu sentinel (no com.sun bean) must not win the min fold
         acc(name) = (math.min(w0, dt), if (dc < 0) p0 else math.min(p0, dc))
         // mirror Bench's post-query drain of registered cleanup handles
-        // (QueryCleanup) so replayed context matches the record's
-        graft.core.QueryCleanup.drain(spark)
+        // (SessionScope) so replayed context matches the record's
+        graft.core.SessionScope.drain(spark)
       }
     }
     println("--- min per query (Bench's rule) ---")

@@ -18,7 +18,8 @@ object QueryTimer {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -49,10 +50,9 @@ object QueryTimer {
       val dc = if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9
       println(f"rep=$i rows=$n time=$dt%.3f s cpu=$dc%.3f s" +
         (if (i == 0) " (warmup)" else ""))
-      // managed queries register cleanup handles per invocation
-      // (QueryCleanup): the drain unpersists this rep's frames and keeps
-      // the registry from growing; clearCache drops everything else
-      graft.core.QueryCleanup.drain(spark)
+      // the drain releases this rep's per-call persists (SessionScope);
+      // clearCache drops everything else
+      graft.core.SessionScope.drain(spark)
       spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Tok}
+import graft.core.{SessionScope, Tables, Tok}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` table: token counting, quality scoring, language ID,
@@ -290,14 +290,18 @@ object TextAnalysis {
   /** [[bm25Impacts]] generalized over the idf form — t16 keeps the integer
     * bit-length idf; t26's sqrt-compressed idf rides the SAME postings/df/
     * stats build (one definition of the index shape, two weighting
-    * schemes). The idf builder receives the `n_train` and `df` columns. */
+    * schemes). The idf builder receives the `n_train` and `df` columns.
+    * The tf frame persists through the session scope (df, dl and stats
+    * all fold over it) until the caller's next drain; the catalog
+    * queries use the memoized [[bm25TfMemo]] instead. */
   private[graft] def bm25ImpactsIdf(s: SparkSession, docs: DataFrame,
                                     idf: (Column, Column) => Column): DataFrame =
-    bm25ImpactsFromTf(bm25Tf(s, docs), idf)
+    bm25ImpactsFromTf(SessionScope.persist(bm25Tf(s, docs)), idf)
 
   /** The tokenized train-side term-frequency frame `(train_id, dl, t, tf)`
     * every BM25-shaped index derives from — the one WordCounts corpus
-    * scan, persisted because df/dl/stats all fold over it. */
+    * scan. A plan, not stored: [[bm25TfMemo]] checkpoints it once,
+    * [[bm25ImpactsIdf]] persists it per call. */
   private[graft] def bm25Tf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     Tables.spread(s, docs.filter(!Curation.isEvalDoc($"doc_id")))
@@ -305,44 +309,32 @@ object TextAnalysis {
       .select($"train_id", size($"w").cast("long").as("dl"),
         explode(graft.functions.WordCounts($"w")).as("wc"))
       .select($"train_id", $"dl", $"wc.t".as("t"), $"wc.tf".as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** [[bm25Tf]] MEMOIZED per (session, dataset) — t16 and t26 derive
     * their postings indexes (same tf/df/stats build, different idf) from
     * the identical corpus scan, so a session running both (a bench sweep,
     * a serving process hosting both retrievers) should tokenize the
-    * train corpus ONCE. Rides [[Similarity.knnMemoized]] — the generic
-    * per-(session, dataset, key) memo — rather than CacheManager
-    * plan-matching, which silently breaks the moment any caller
-    * unpersists or reshapes the shared subplan (the r14 kNN lesson).
-    * localCheckpoint'd, not persist-only (r20): the memoized persist
-    * registered in the CacheManager exactly once, so the first
-    * sweep-side `clearCache()` stripped it permanently — after which
+    * train corpus ONCE. localCheckpoint'd, not persist-only (r20): the
+    * memoized persist registered in the CacheManager exactly once, so the
+    * first sweep-side `clearCache()` stripped it permanently — after which
     * every impacts build re-ran the WordCounts tokenization THREE times
     * per action (tf feeds the postings row, the df fold and the stats
     * fold of one plan; measured 30–58 process-cpu-s per cache-cleared
-    * t16 rep at sf0.1) — the exact ed2/bpeRound5 storage lesson. */
+    * t16 rep at sf0.1) — the exact ed2/bpeRound5 storage lesson. The
+    * checkpoint is the frame's only copy.
+    *
+    * The df fold and idf×tfn projection over it stay LAZY (r20,
+    * measured): each idf form has exactly one consumer chain (t16's
+    * scored frame; the sqrt family's [[probeScoredMemo]]), so a separate
+    * checkpointed impacts memo added a full extra materialization pass to
+    * the first toucher's cold time (+0.6 s on t26) and bought nothing
+    * downstream — the shared consumable is the SCORED frame, not the
+    * index. */
   private[graft] def bm25TfMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "bm25tf") {
-      val tf = bm25Tf(s, Tables.documents(s, d))
-      val out = tf.localCheckpoint()
-      tf.unpersist(false)
-      out
+    SessionScope.memo(s, d, "bm25tf") {
+      bm25Tf(s, Tables.documents(s, d)).localCheckpoint()
     }
-
-  /** The impacts index for one idf form over the MEMOIZED tf frame —
-    * the df fold and idf×tfn projection stay LAZY (r20, measured): each
-    * idf form has exactly one consumer chain (t16's scored frame; the
-    * sqrt family's [[probeScoredMemo]]), so a separate checkpointed
-    * impacts memo added a full extra materialization pass to the first
-    * toucher's cold time (+0.6 s on t26 in the first r20 capture) and
-    * bought nothing downstream — the shared consumable is the SCORED
-    * frame, not the index. The tf checkpoint already bounds the build
-    * at one tokenization per session. */
-  private[graft] def bm25ImpactsIdfMemoTf(s: SparkSession, d: String,
-      idf: (Column, Column) => Column): DataFrame =
-    bm25ImpactsFromTf(bm25TfMemo(s, d), idf)
 
   /** The impacts index `(t, train_id, fx)` from a prebuilt [[bm25Tf]]
     * frame — the df/stats folds and the fixed-point idf×tfn projection. */
@@ -368,7 +360,7 @@ object TextAnalysis {
     * definition runs on a batch table or a live probe micro-batch. A
     * null-text probe tokenizes to zero rows (both engines agree:
     * `explode(null)` and `unnest(NULL)` drop the row) — which is why the
-    * VECTOR-arm probe universe in [[rrfFusionManaged]] must come from
+    * VECTOR-arm probe universe in [[rrfVecArmBrute]] must come from
     * probe IDS, never from this frame. */
   private[graft] def probeTermsOf(probes: DataFrame): DataFrame =
     probes.select(col("doc_id").as("eval_id"),
@@ -395,6 +387,14 @@ object TextAnalysis {
       .agg(sum(col("fx")).as("sfx"))
   }
 
+  /** The per-call scored frame every retrieval pipeline ranks:
+    * [[bm25Scores]] persisted through the session scope, because TopK's
+    * range-partitioner sampling job replays its input once more than
+    * you'd expect (measured ~2× on t16). t16 and the serving twins build
+    * it per call; the sqrt-idf catalog queries pass [[probeScoredMemo]]. */
+  private[graft] def probeScored(post: DataFrame, probeTerms: DataFrame): DataFrame =
+    SessionScope.persist(bm25Scores(post, probeTerms))
+
   /** t26's sqrt-compressed idf — sqrt(N/df), ONE definition shared by the
     * query and its serving twin. IEEE sqrt is correctly rounded in both
     * engines (the guarantee every cosine here leans on), so no float log
@@ -403,49 +403,18 @@ object TextAnalysis {
   private[graft] val sqrtIdf: (Column, Column) => Column =
     (nTrain, df) => sqrt(nTrain.cast("double") / df.cast("double"))
 
-  /** t26's rerank on arbitrary pre-shaped frames — `probeTerms` as
-    * `(eval_id, t)` (from [[bm25ProbeTerms]]), `post` a FROZEN impacts
-    * index `(t, train_id, fx)`, `emb` as `(vec_id, v, nrm)` — factored so
-    * the serving twin can run the identical definition per micro-batch of
-    * ARRIVING probe documents against the static index + embedding table.
-    * Every per-probe quantity (slate, min-max normalizer, blend) derives
-    * only from that probe's own rows, so the union over any probe
-    * batching equals the one-shot batch run. */
-  private[graft] def hybridRerank(probeTerms: DataFrame, post: DataFrame,
-                                  emb: DataFrame): DataFrame =
-    hybridRerankManaged(probeTerms, post, emb)._1
-
-  /** [[hybridRerank]] plus a cleanup handle that unpersists the two
-    * intermediate frames (`scored`, `cand`) it caches per call. The
-    * catalog lambda defers its handle to the runner via
-    * [[graft.core.QueryCleanup]] (the runner materializes the frame
-    * after the lambda returns — r18 ADVICE: Bench's no-clear reps mode
-    * otherwise accumulated the per-call persists); a LONG-RUNNING
-    * serving caller — one rerank per micro-batch — invokes the handle
-    * inline after materializing each batch's result. Unpersist is
-    * non-blocking: the frames are dead by then, eviction can lag the
-    * next batch safely. */
-  private[graft] def hybridRerankManaged(
-      probeTerms: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
-    val (joint, cleanup) = rerankJointScores(probeTerms, post, emb)
-    (rankHybridJoint(joint), cleanup)
-  }
-
-  /** [[hybridRerankManaged]] downstream of an already-materialized
-    * scored frame — the t26 catalog lambda passes [[probeScoredMemo]]. */
-  private[graft] def hybridRerankFromScored(
-      scored: DataFrame, emb: DataFrame): (DataFrame, () => Unit) = {
-    val (joint, cleanup) = rerankJointScoresFrom(scored, emb)
-    (rankHybridJoint(joint), cleanup)
-  }
-
-  /** t26's final blended slate over the joint-scoring frame. */
-  private def rankHybridJoint(joint: DataFrame): DataFrame = {
-    val s = joint.sparkSession
+  /** t26's rerank over a scored frame `(eval_id, train_id, sfx)` and an
+    * embedding frame `(vec_id, v, nrm)`: the catalog lambda passes
+    * [[probeScoredMemo]], the serving twin a [[probeScored]] frame per
+    * micro-batch of ARRIVING probe documents against the static index +
+    * embedding table. Every per-probe quantity (slate, min-max
+    * normalizer, blend) derives only from that probe's own rows, so the
+    * union over any probe batching equals the one-shot batch run. */
+  private[graft] def hybridRerank(scored: DataFrame, emb: DataFrame): DataFrame = {
+    val s = scored.sparkSession
     import s.implicits._
     graft.operators.TopK.perKey(
-        joint, $"eval_id", Seq($"bfx".desc, $"train_id"), 5,
+        rerankJointScores(scored, emb), $"eval_id", Seq($"bfx".desc, $"train_id"), 5,
         saltFrom = $"train_id")
       .select($"eval_id", $"rn".as("rank"), $"train_id",
         round($"sfx".cast("double") / lit(1e6), 6).as("bm25"),
@@ -458,39 +427,20 @@ object TextAnalysis {
     * `(eval_id, train_id, sfx, cfx, bfx)` for each of the ≤10 stage-1
     * candidates per probe — lexical fixed-point sum, cosine fixed-point,
     * and the min-max-normalized integer blend. Factored out of
-    * [[hybridRerankManaged]] so the recall census can rank the SAME rows
-    * two ways (by blend = the slate, by cosine alone = the in-slate
-    * ground truth) without duplicating the scoring definition. */
+    * [[hybridRerank]] so the recall census can rank the SAME rows two
+    * ways (by blend = the slate, by cosine alone = the in-slate ground
+    * truth) without duplicating the scoring definition. */
   private[graft] def rerankJointScores(
-      probeTerms: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
-    // persisted for the same reason as t16 (TopK's exchange replays its
-    // input once more than you'd expect under the final orderBy's
-    // range-partitioner sampling job)
-    val scored = bm25Scores(post, probeTerms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (blended, inner) = rerankJointScoresFrom(scored, emb)
-    (blended, () => { inner(); scored.unpersist(false); () })
-  }
-
-  /** [[rerankJointScores]] downstream of an ALREADY-MATERIALIZED scored
-    * frame — the catalog queries pass the per-(session, dataset)
-    * memoized probe scoring ([[probeScoredMemo]]), so only the per-call
-    * candidate slate persists here; the generic probe-frame entry above
-    * (the serving twins' per-micro-batch path) builds and owns its own
-    * scored frame. */
-  private[graft] def rerankJointScoresFrom(
-      scored: DataFrame, emb: DataFrame): (DataFrame, () => Unit) = {
+      scored: DataFrame, emb: DataFrame): DataFrame = {
     val s = scored.sparkSession
     import s.implicits._
     // stage-1 cut: top-10 lexical candidates per probe — referenced
     // three times below (embedding fetch, eval-id set, min-max stats),
     // so persist the 10·n_eval-row frame rather than replay retrieval
-    val cand = graft.operators.TopK.perKey(
+    val cand = SessionScope.persist(graft.operators.TopK.perKey(
         scored, $"eval_id", Seq($"sfx".desc, $"train_id"), 10,
         saltFrom = $"train_id")
-      .select($"eval_id", $"train_id", $"sfx")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select($"eval_id", $"train_id", $"sfx"))
     // candidate-local min-max PER PROBE (not the corpus, not the batch:
     // rerank normalizers must come from the slate actually shown — a
     // batch-pooled normalizer would make output depend on which probes
@@ -510,12 +460,11 @@ object TextAnalysis {
         round(($"sfx" - $"mn").cast("double") /
           ($"mx" - $"mn").cast("double") * lit(1e6)).cast("long"))
       .otherwise(lit(500000L))
-    val blended = te.join(broadcast(ev), Seq("eval_id"))
+    te.join(broadcast(ev), Seq("eval_id"))
       .select($"eval_id", $"train_id", $"sfx", cfx.as("cfx"))
       .join(broadcast(mm), Seq("eval_id"))
       .select($"eval_id", $"train_id", $"sfx", $"cfx",
         (nbFx + $"cfx").as("bfx"))
-    (blended, () => { cand.unpersist(false); () })
   }
 
   /** t27's recall census for the hybrid pipeline — the standard ablation
@@ -534,6 +483,12 @@ object TextAnalysis {
     *    the hits machinery has teeth that the corpus arm's all-zero
     *    column cannot provide).
     *
+    * Inputs: the [[rerankJointScores]] frame and the exact top-5 arm
+    * `(eval_id, train_id)` — the catalog lambda passes the top-5 PREFIX
+    * of the memoized brute top-10 rank list (the salted TopK at k=5 is
+    * exactly the first 5 rows of the same total order at k=10, so the
+    * set is identical).
+    *
     * Probe universe: embedded eval probes (`vec_id % 100 = 0`; the
     * vec_id == doc_id convention is canary-pinned, embeddings ⊆
     * documents) — LEFT-joined so a probe whose candidates all lack
@@ -545,64 +500,18 @@ object TextAnalysis {
     * brute-force shape — the n_eval probe vectors broadcast into ONE
     * scan of the embedded train corpus, per-probe top-5 via the salted
     * TopK; the corpus never shuffles and nothing here is quadratic in
-    * corpus size (probes × corpus is the irreducible exact-ground-truth
-    * cost, embarrassingly scan-parallel). */
-  private[graft] def rerankRecall(probeTerms: DataFrame, post: DataFrame,
-                                  emb: DataFrame): DataFrame =
-    rerankRecallManaged(probeTerms, post, emb)._1
-
-  /** [[rerankRecall]] plus the cleanup handle the r17 version dropped
-    * (the r17 verdict's one hygiene defect): the census persists three
-    * frames per call — the inner scoring pair via [[rerankJointScores]]
-    * plus its own `joint`/`slate` — and a long-running caller (an
-    * ablation sweep re-grading per index rebuild — the t30 rebuild-loop
-    * spec exercises exactly this rhythm) must reclaim them after
-    * materializing each census, exactly like [[hybridRerankManaged]].
-    * The t27 catalog lambda defers its handle to the runner via
-    * [[graft.core.QueryCleanup]]. */
-  private[graft] def rerankRecallManaged(
-      probeTerms: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
-    val s = post.sparkSession
-    import s.implicits._
-    val (jointRaw, innerCleanup) = rerankJointScores(probeTerms, post, emb)
-    val evV = emb.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("eval_id"), $"v".as("ev"), $"nrm".as("enrm"))
-    val trV = emb.filter($"vec_id" % 10 =!= 0)
-      .select($"vec_id".as("train_id"), $"v".as("tv"), $"nrm".as("tnrm"))
-    // same fixed-point cosine discipline as the rerank's cfx arm, so the
-    // ground truth and the slate rank in the same integer space
-    val exact = graft.operators.TopK.perKey(
-        trV.crossJoin(broadcast(evV))
-          .select($"eval_id", $"train_id",
-            round(Similarity.cosineWithNorms($"tv", $"ev", $"tnrm", $"enrm")
-              * lit(1e6)).cast("long").as("cfx")),
-        $"eval_id", Seq($"cfx".desc, $"train_id"), 5, saltFrom = $"train_id")
-      .select($"eval_id", $"train_id")
-    val (out, core) = rerankRecallCore(jointRaw, exact, emb)
-    (out, () => { core(); innerCleanup(); () })
-  }
-
-  /** The census downstream of a PRE-BUILT joint frame and exact top-5
-    * arm — the t27 catalog lambda passes the memoized joint inputs and
-    * the top-5 PREFIX of the memoized brute top-10 rank list (the salted
-    * TopK at k=5 is exactly the first 5 rows of the same total order at
-    * k=10, so the set is identical); the generic entry above builds its
-    * own. Persists the per-call joint/slate pair (ranked twice). */
-  private[graft] def rerankRecallCore(
-      jointRaw: DataFrame, exact: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
+    * corpus size. */
+  private[graft] def rerankRecall(jointRaw: DataFrame, exact: DataFrame,
+                                  emb: DataFrame): DataFrame = {
     val s = jointRaw.sparkSession
     import s.implicits._
     // ≤10 rows per probe, ranked twice below — persist the tiny frame
     // rather than replay stage-1 retrieval per ranking
-    val joint = jointRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val slate = graft.operators.TopK.perKey(
+    val joint = SessionScope.persist(jointRaw)
+    val slate = SessionScope.persist(graft.operators.TopK.perKey(
         joint, $"eval_id", Seq($"bfx".desc, $"train_id"), 5,
         saltFrom = $"train_id")
-      .select($"eval_id", $"train_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select($"eval_id", $"train_id"))
     val candTop = graft.operators.TopK.perKey(
         joint, $"eval_id", Seq($"cfx".desc, $"train_id"), 5,
         saltFrom = $"train_id")
@@ -614,7 +523,7 @@ object TextAnalysis {
       .groupBy($"eval_id").agg(count(lit(1)).as("corpus_hits"))
     val hk = slate.join(candTop, Seq("eval_id", "train_id"))
       .groupBy($"eval_id").agg(count(lit(1)).as("cand_hits"))
-    val out = evV.distinct()
+    evV.distinct()
       .join(ns, Seq("eval_id"), "left")
       .join(hc, Seq("eval_id"), "left")
       .join(hk, Seq("eval_id"), "left")
@@ -627,22 +536,21 @@ object TextAnalysis {
         round(coalesce($"cand_hits", lit(0L)).cast("double") / lit(5.0), 6)
           .as("cand_recall"))
       .orderBy($"eval_id")
-    (out, () => {
-      joint.unpersist(false); slate.unpersist(false); ()
-    })
   }
 
-  /** The rank-space fusion CORE shared by t28 (brute-force vector arm)
-    * and t29 (vector arm SERVED from the saved IVF-PQ index): FULL OUTER
-    * join of two per-probe rank lists `(eval_id, train_id, lex_rank)` /
-    * `(eval_id, train_id, vec_rank)`, RRF score = Σ_arms 1e9 div
-    * (60 + rank) as an INTEGER sum (a doc absent from an arm contributes
-    * 0 — nothing vanishes), salted top-5 per probe with the train_id
-    * total tie-break. ONE definition: the served composition and the
-    * oracle-checked brute-force t28 run the same fusion operator, so
-    * proving one proves the other's combiner. The join touches two
-    * ≤rank-depth-rows-per-probe frames — nothing here scales with the
-    * corpus. */
+  /** Reciprocal-rank fusion of two per-probe rank lists `(eval_id,
+    * train_id, lex_rank)` / `(eval_id, train_id, vec_rank)` — the ONE
+    * fusion entry point: t28 passes the memoized lexical and brute-force
+    * arms, t29 the lexical arm and the rank list SERVED from the saved
+    * IVF-PQ index, the serving twins [[rrfLexArm]] over a per-batch
+    * [[probeScored]] frame plus the batch's vector arm. FULL OUTER join,
+    * RRF score = Σ_arms 1e9 div (60 + rank) as an INTEGER sum (a doc
+    * absent from an arm contributes 0 — nothing vanishes), salted top-5
+    * per probe with the train_id total tie-break. Both arms rank PER
+    * PROBE, so the union over any probe batching equals the one-shot
+    * batch run — rank-space fusion has no cross-probe state at all, not
+    * even a normalizer. The join touches two ≤rank-depth-rows-per-probe
+    * frames — nothing here scales with the corpus. */
   private[graft] def rrfFuseRanks(lex: DataFrame, vec: DataFrame): DataFrame = {
     val s = lex.sparkSession
     import s.implicits._
@@ -675,43 +583,16 @@ object TextAnalysis {
       .select($"eval_id", $"train_id", $"rn".cast("long").as("lex_rank"))
   }
 
-  /** t28's reciprocal-rank fusion over a frame of probe DOCUMENTS
-    * (`doc_id`, `text`) against a FROZEN impacts index and embedding
-    * table — factored like [[hybridRerank]] so a serving twin can run
-    * the identical definition per micro-batch of arriving probes. Both
-    * arms rank PER PROBE (the lexical TopK and the vector TopK each
-    * partition by eval_id), so the union over any probe batching equals
-    * the one-shot batch run — rank-space fusion has no cross-probe
-    * state at all, not even a normalizer.
-    *
-    * The signature takes the probe DOCS (not pre-tokenized terms — the
-    * r17 ADVICE): the vector-arm probe universe derives from probe IDS
-    * joined to the embedding table, structurally matching the oracle's
-    * `vec_id % 100 = 0` under the canary-pinned embeddings ⊆ documents
-    * invariant, so a probe whose text tokenizes to NOTHING (null text)
-    * still fuses its vector arm instead of silently vanishing. */
-  private[graft] def rrfFusion(probes: DataFrame, post: DataFrame,
-                               emb: DataFrame): DataFrame =
-    rrfFusionManaged(probes, post, emb)._1
-
-  /** [[rrfFusion]] plus the cleanup handle that unpersists the one
-    * intermediate frame (`scored`) it caches per call — the managed
-    * form a long-running serving loop must call after materializing
-    * each micro-batch's slate, or per-batch cache entries accumulate
-    * bounded only by LRU pressure (the r17 verdict's hygiene defect;
-    * [[hybridRerankManaged]] is the established pattern). */
-  private[graft] def rrfFusionManaged(
-      probes: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) =
-    rrfFusedWithArmManaged(probes, post, rrfVecArmBrute(probes, emb))
-
-  /** t28's BRUTE-FORCE vector arm: per-probe top-10 exact-cosine rank
-    * list over the embedded train corpus — `(eval_id, train_id,
-    * vec_rank)`, s01's broadcast-probes-into-one-scan shape. The probe
-    * universe is the probe IDS that have an embedding (see
-    * [[rrfFusion]]). t29 swaps this arm for the SAVED-index serve
-    * ([[Similarity.ivfpqServedTrainRanks]]) — same frame shape, same
-    * fusion core. */
+  /** t28's BRUTE-FORCE vector arm over a frame of probe DOCUMENTS
+    * (`doc_id`, ...): per-probe top-10 exact-cosine rank list over the
+    * embedded train corpus — `(eval_id, train_id, vec_rank)`, s01's
+    * broadcast-probes-into-one-scan shape. The probe universe is the
+    * probe IDS joined to the embedding table (the r17 ADVICE), matching
+    * the oracle's `vec_id % 100 = 0` under the canary-pinned embeddings ⊆
+    * documents invariant, so a probe whose text tokenizes to NOTHING
+    * still fuses its vector arm. t29 swaps this arm for the SAVED-index
+    * serve ([[Similarity.ivfpqServedTrainRanks]]) — same frame shape,
+    * same fusion. */
   private[graft] def rrfVecArmBrute(probes: DataFrame,
                                     emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
@@ -749,18 +630,18 @@ object TextAnalysis {
     *    t30/t31.
     * All localCheckpoint'd (the ed2 storage lesson); every consumer
     * join broadcasts the probe-sized side, so no layout is lost. The
-    * serving twins keep the generic probe-frame entry points — a
-    * micro-batch's probes are not the session constant. */
+    * serving twins pass per-batch frames to the same pipelines instead —
+    * a micro-batch's probes are not the session constant. */
   private[graft] def probeScoredMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "bm25sc_sq") {
-      bm25Scores(bm25ImpactsIdfMemoTf(s, d, sqrtIdf),
+    SessionScope.memo(s, d, "bm25sc_sq") {
+      bm25Scores(bm25ImpactsFromTf(bm25TfMemo(s, d), sqrtIdf),
           bm25ProbeTerms(Tables.documents(s, d)))
         .localCheckpoint()
     }
 
   /** See [[probeScoredMemo]]. */
   private[graft] def rrfLexArmMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "rrf_lex") {
+    SessionScope.memo(s, d, "rrf_lex") {
       rrfLexArm(probeScoredMemo(s, d)).localCheckpoint()
     }
 
@@ -776,7 +657,7 @@ object TextAnalysis {
 
   /** See [[probeScoredMemo]]. */
   private[graft] def rrfVecExactMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "rrf_vecx") {
+    SessionScope.memo(s, d, "rrf_vecx") {
       import s.implicits._
       rrfVecArmBrute(
           Tables.documents(s, d).filter($"doc_id" % 100 === 0),
@@ -787,25 +668,23 @@ object TextAnalysis {
   /** See [[probeScoredMemo]]. t30 reads the slate's (eval_id, train_id)
     * set; t31 additionally grades by its rank column. */
   private[graft] def rrfExactSlateMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "rrf_exsl") {
+    SessionScope.memo(s, d, "rrf_exsl") {
       rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d))
         .localCheckpoint()
     }
 
-  /** The ONE fusion pipeline both t28 and t29 run: lexical retrieval
-    * ranks from the frozen impacts index fused with a SUPPLIED vector
-    * rank arm through [[rrfFuseRanks]]. t28 passes the brute-force arm,
-    * t29 the saved-IVF-PQ-served arm — proving the served composition
-    * exercises the identical combiner the oracle checks on t28. */
-  private[graft] def rrfFusedWithArmManaged(
-      probes: DataFrame, post: DataFrame,
-      vecArm: DataFrame): (DataFrame, () => Unit) = {
-    // persisted for t16's reason: TopK's range-partitioner sampling
-    // replays its input once more than you'd expect
-    val scored = bm25Scores(post, probeTermsOf(probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (rrfFuseRanks(rrfLexArm(scored), vecArm),
-      () => { scored.unpersist(false); () })
+  /** The exact-fusion side t30 and t31 grade a served fusion against,
+    * built per call from a frame of probe DOCUMENTS: `(lex, vecExact,
+    * exactSlate)` — the lexical arm, the brute-force vector arm and
+    * their [[rrfFuseRanks]] slate, each persisted through the session
+    * scope (the fusion's TopK sampling replays its inputs; the slate
+    * feeds two gradings). The catalog lambdas pass [[rrfLexArmMemo]],
+    * [[rrfVecExactMemo]] and [[rrfExactSlateMemo]] instead. */
+  private[graft] def exactFusionArms(probes: DataFrame, post: DataFrame,
+      emb: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val lex = SessionScope.persist(rrfLexArm(probeScored(post, probeTermsOf(probes))))
+    val vecExact = SessionScope.persist(rrfVecArmBrute(probes, emb))
+    (lex, vecExact, SessionScope.persist(rrfFuseRanks(lex, vecExact)))
   }
 
   /** t30's recall census for the SERVED fusion — t27's ablation
@@ -817,59 +696,32 @@ object TextAnalysis {
     *    cosine rank list — the ARM-level recall (s06's discipline on
     *    the IVF-PQ serve) that explains the slate divergence.
     * The lexical arm and the [[rrfFuseRanks]] core are SHARED between
-    * the two fusions (built once here), so any divergence is
-    * attributable to the vector arm alone. Universe: embedded eval
-    * probes, LEFT-joined with sentinel zeros (c26's vanished-row
-    * lesson). Scale shape: one lexical retrieval, one brute-force rank
-    * pass (the irreducible exact-ground-truth cost, s01's scan-parallel
-    * shape), one served rank pass (cell-local), and intersections over
+    * the two fusions, so any divergence is attributable to the vector
+    * arm alone. `lex`, `exactSlate` and `vecExact` come from
+    * [[exactFusionArms]] or the catalog memos; only the served arm and
+    * the served slate persist per call. Universe: embedded eval probes,
+    * LEFT-joined with sentinel zeros (c26's vanished-row lesson). Scale
+    * shape: one served rank pass (cell-local) and intersections over
     * ≤10-rows-per-probe frames. */
-  private[graft] def servedFusionRecallManaged(
-      probes: DataFrame, post: DataFrame, emb: DataFrame,
-      vecServed: DataFrame): (DataFrame, () => Unit) = {
-    val s = post.sparkSession
-    import s.implicits._
-    val scored = bm25Scores(post, probeTermsOf(probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lex = rrfLexArm(scored)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vecExact = rrfVecArmBrute(probes, emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exactSlate = rrfFuseRanks(lex, vecExact)
-      .select($"eval_id", $"train_id")
-    val (out, core) =
-      servedFusionRecallCore(lex, exactSlate, vecExact, vecServed, emb)
-    (out, () => {
-      core(); scored.unpersist(false); lex.unpersist(false)
-      vecExact.unpersist(false); ()
-    })
-  }
-
-  /** The census downstream of PRE-BUILT lexical arm / exact slate /
-    * exact rank arm (the t30 catalog lambda passes the per-(session,
-    * dataset) memos; the generic probe-frame entry above builds and owns
-    * its own). Persists only the genuinely per-call frames — the served
-    * arm and the served slate. */
-  private[graft] def servedFusionRecallCore(
+  private[graft] def servedFusionRecall(
       lex: DataFrame, exactSlate: DataFrame, vecExact: DataFrame,
-      vecServed: DataFrame, emb: DataFrame): (DataFrame, () => Unit) = {
+      vecServed: DataFrame, emb: DataFrame): DataFrame = {
     val s = lex.sparkSession
     import s.implicits._
-    val vecSrv = vecServed
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val servedSlate = rrfFuseRanks(lex, vecSrv)
-      .select($"eval_id", $"train_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecSrv = SessionScope.persist(vecServed)
+    val servedSlate = SessionScope.persist(rrfFuseRanks(lex, vecSrv)
+      .select($"eval_id", $"train_id"))
     val evU = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("eval_id"))
     val ns = servedSlate.groupBy($"eval_id").agg(count(lit(1)).as("n_served"))
-    val fh = servedSlate.join(exactSlate, Seq("eval_id", "train_id"))
+    val fh = servedSlate
+      .join(exactSlate.select($"eval_id", $"train_id"), Seq("eval_id", "train_id"))
       .groupBy($"eval_id").agg(count(lit(1)).as("fusion_hits"))
     val ah = vecSrv.select($"eval_id", $"train_id")
       .join(vecExact.select($"eval_id", $"train_id"),
         Seq("eval_id", "train_id"))
       .groupBy($"eval_id").agg(count(lit(1)).as("arm_hits"))
-    val out = evU
+    evU
       .join(ns, Seq("eval_id"), "left")
       .join(fh, Seq("eval_id"), "left")
       .join(ah, Seq("eval_id"), "left")
@@ -882,9 +734,6 @@ object TextAnalysis {
         round(coalesce($"arm_hits", lit(0L)).cast("double") / lit(10.0), 6)
           .as("arm_recall"))
       .orderBy($"eval_id")
-    (out, () => {
-      vecSrv.unpersist(false); servedSlate.unpersist(false); ()
-    })
   }
 
   /** NDCG@5 discount weights as INTEGER fixed-point millionths —
@@ -913,68 +762,36 @@ object TextAnalysis {
     *    (binary relevance — the companion number for "how deep does a
     *    user dig before the first right answer"), 6-dp-rounded exact
     *    reciprocal; sentinel 0 when no served row hits.
-    * The arms and both fusions are SHARED with t30's construction (one
-    * lexical retrieval, rrfFuseRanks core both sides) so the metrics
-    * grade exactly the slates t30 counts. Universe: embedded eval
-    * probes LEFT-joined with sentinel zeros (c26's vanished-row
-    * lesson). Scale shape: identical to t30 — one lexical retrieval,
-    * one exact rank pass (the irreducible ground-truth cost), one
-    * served rank pass (cell-local), then grading joins over
-    * ≤5-rows-per-probe slates; nothing downstream of the arms scales
-    * with the corpus. */
-  private[graft] def servedRankingMetricsManaged(
-      probes: DataFrame, post: DataFrame, emb: DataFrame,
-      vecServed: DataFrame): (DataFrame, () => Unit) = {
-    val s = post.sparkSession
-    import s.implicits._
-    val scored = bm25Scores(post, probeTermsOf(probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lex = rrfLexArm(scored)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the arms are each consumed once here, but the fusion's TopK
-    // range-partitioner sampling replays its input (t16's lesson), and
-    // the brute exact arm is the expensive one — persist both, as t30
-    val vecExact = rrfVecArmBrute(probes, emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the exact slate feeds BOTH the IDCG aggregate and the
-    // graded join
-    val exactSlate = rrfFuseRanks(lex, vecExact)
-      .select($"eval_id", $"train_id", $"rank".cast("long").as("exact_rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (out, core) =
-      servedRankingMetricsCore(lex, exactSlate, vecServed, emb)
-    (out, () => {
-      core(); scored.unpersist(false); lex.unpersist(false)
-      vecExact.unpersist(false); exactSlate.unpersist(false); ()
-    })
-  }
-
-  /** The grading downstream of PRE-BUILT lexical arm / graded exact
-    * slate `(eval_id, train_id, exact_rank)` — the t31 catalog lambda
-    * passes the memos; only the served arm persists per call. */
-  private[graft] def servedRankingMetricsCore(
+    * `lex` and `exactSlate` are the same inputs t30 takes (so the metrics
+    * grade exactly the slates t30 counts); only the served arm persists
+    * per call. Universe: embedded eval probes LEFT-joined with sentinel
+    * zeros (c26's vanished-row lesson). Scale shape: one served rank
+    * pass (cell-local), then grading joins over ≤5-rows-per-probe
+    * slates; nothing downstream of the arms scales with the corpus. */
+  private[graft] def servedRankingMetrics(
       lex: DataFrame, exactSlate: DataFrame, vecServed: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
+      emb: DataFrame): DataFrame = {
     val s = lex.sparkSession
     import s.implicits._
-    val vecSrv = vecServed
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecSrv = SessionScope.persist(vecServed)
+    val exact = exactSlate
+      .select($"eval_id", $"train_id", $"rank".cast("long").as("exact_rank"))
     val servedSlate = rrfFuseRanks(lex, vecSrv)
       .select($"eval_id", $"train_id", $"rank".cast("long").as("srv_rank"))
     val graded = servedSlate
-      .join(exactSlate, Seq("eval_id", "train_id"), "left")
+      .join(exact, Seq("eval_id", "train_id"), "left")
       .select($"eval_id", $"srv_rank",
         when($"exact_rank".isNull, lit(0L))
           .otherwise(lit(6L) - $"exact_rank").as("rel"))
     val dcg = graded.groupBy($"eval_id").agg(
       sum($"rel" * ndcgW($"srv_rank")).as("dcg"),
       min(when($"rel" > 0, $"srv_rank")).as("first_hit"))
-    val idcg = exactSlate.groupBy($"eval_id").agg(
+    val idcg = exact.groupBy($"eval_id").agg(
       count(lit(1)).as("n_exact"),
       sum((lit(6L) - $"exact_rank") * ndcgW($"exact_rank")).as("idcg"))
     val evU = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("eval_id"))
-    val out = evU
+    evU
       .join(idcg, Seq("eval_id"), "left")
       .join(dcg, Seq("eval_id"), "left")
       .select($"eval_id",
@@ -990,7 +807,6 @@ object TextAnalysis {
           round(lit(1.0) / $"first_hit".cast("double"), 6))
           .otherwise(lit(0.0)).as("mrr"))
       .orderBy($"eval_id")
-    (out, () => { vecSrv.unpersist(false); () })
   }
 
   /** t12/t14/t25's shared BPE training (r19, guide §2.4): the round-`i`
@@ -1006,7 +822,7 @@ object TextAnalysis {
     * top-5 is the round's argmax pair, the same row the old
     * `orderBy(cnt desc, pair).limit(1)` produced. */
   private[graft] def bpeRound5(s: SparkSession, d: String, i: Int): DataFrame =
-    Similarity.knnMemoized(s, d, s"bpe_t5_$i") {
+    SessionScope.memo(s, d, s"bpe_t5_$i") {
       // localCheckpoint, NOT persist: a memoized frame's persist would
       // register in the CacheManager exactly once and the first
       // sweep-side clearCache() would strip it permanently (the ed2
@@ -1059,7 +875,7 @@ object TextAnalysis {
     * training executes at most once per session (a cache read when t12
     * has already run, the full 3-scan replay otherwise). */
   private[graft] def bpeWinner(s: SparkSession, d: String, i: Int): DataFrame =
-    Similarity.knnMemoized(s, d, s"bpe_w$i") {
+    SessionScope.memo(s, d, s"bpe_w$i") {
       import s.implicits._
       bpeRound5(s, d, i).filter($"rnk" === 1).select($"pair").localCheckpoint()
     }
@@ -1071,7 +887,7 @@ object TextAnalysis {
     * and its sketch from it; t21 feeds sketches AND the exact pairwise
     * overlap. */
   private def kmvDistinctHashes(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "kmv_dm") {
+    SessionScope.memo(s, d, "kmv_dm") {
       // r19: memoized localCheckpoint instead of a per-invocation persist
       // — t09 and t21 previously shared the corpus-wide distinct only via
       // CacheManager plan-matching (and re-ran it whenever a sweep
@@ -1599,15 +1415,11 @@ object TextAnalysis {
       val docs = Tables.documents(s, d)
       // the tokenized tf frame is the memoized checkpointed session
       // constant (r20); the df/idf derivation stays lazy — see
-      // bm25ImpactsIdfMemoTf for why it is not its own memo
-      val post = bm25ImpactsIdfMemoTf(s, d, bitLenIdf)
-      // distinct query terms per probe item (ShingleArr width 1)
-      val q = bm25ProbeTerms(docs)
-      // persisted: the final orderBy's range partitioner runs a SAMPLING
-      // job over its input, which would otherwise recompute the whole
-      // fan-out aggregation a second time (measured ~2× the query)
-      val scored = bm25Scores(post, q)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // bm25TfMemo for why it is not its own memo
+      val post = bm25ImpactsFromTf(bm25TfMemo(s, d), bitLenIdf)
+      // distinct query terms per probe item (ShingleArr width 1); the
+      // scored frame persists until the runner's drain
+      val scored = probeScored(post, bm25ProbeTerms(docs))
       graft.operators.TopK.perKey(
           scored, $"eval_id", Seq($"sfx".desc, $"train_id"), 3, saltFrom = $"train_id")
         .select($"eval_id", $"rn".as("rank"), $"train_id",
@@ -1652,16 +1464,9 @@ object TextAnalysis {
     // top-5 is the salted TopK over ≤10 rows per key.
     "t26_hybrid_rerank" -> { (s, d) =>
       // the dense probe scoring is the memoized session constant (r20);
-      // only the per-call candidate slate persists here.
-      // a catalog lambda cannot invoke the cleanup handle itself (the
-      // runner materializes the frame after we return) — register it so
-      // the runner drains it post-materialization (QueryCleanup; the
-      // r18 ADVICE: Bench's no-clear reps mode otherwise accumulates
-      // each managed query's per-call persists under LRU pressure only)
-      val (out, cleanup) =
-        hybridRerankFromScored(probeScoredMemo(s, d), embWithNorms(s, d))
-      graft.core.QueryCleanup.register(s, cleanup)
-      out
+      // only the per-call candidate slate persists, until the runner's
+      // drain (a lambda returns before its frame materializes)
+      hybridRerank(probeScoredMemo(s, d), embWithNorms(s, d))
     },
 
     // Recall census for the hybrid retrieve-then-rerank pipeline — the
@@ -1676,15 +1481,10 @@ object TextAnalysis {
       import s.implicits._
       val emb = embWithNorms(s, d)
       // memoized joint inputs + the exact arm as the top-5 prefix of the
-      // memoized brute top-10 (identical set — same total order);
-      // cleanup deferred to the runner's drain (see t26)
-      val (joint, jointCleanup) =
-        rerankJointScoresFrom(probeScoredMemo(s, d), emb)
+      // memoized brute top-10 (identical set — same total order)
       val exact = rrfVecExactMemo(s, d).filter($"vec_rank" <= 5)
         .select($"eval_id", $"train_id")
-      val (out, core) = rerankRecallCore(joint, exact, emb)
-      graft.core.QueryCleanup.register(s, () => { core(); jointCleanup() })
-      out
+      rerankRecall(rerankJointScores(probeScoredMemo(s, d), emb), exact, emb)
     },
 
     // Reciprocal-rank fusion — the OTHER standard hybrid-search
@@ -1713,8 +1513,7 @@ object TextAnalysis {
     "t28_rrf_fusion" -> { (s, d) =>
       // both arms are the memoized session constants (r20): the fusion
       // itself is a full-outer join of two ≤10-rows-per-probe
-      // checkpointed frames + the salted top-5 — no per-call persists,
-      // so nothing to register with QueryCleanup
+      // checkpointed frames + the salted top-5 — no per-call persists
       rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d))
     },
 
@@ -1742,12 +1541,10 @@ object TextAnalysis {
       // the lexical arm is the memoized session constant; the served arm
       // rides the MEMOIZED train index (one build per session serves
       // t29, t30, t31 and the twins — r18 verdict ask #1) and persists
-      // per call (the fusion's TopK + final sort replay their input);
-      // cleanup deferred to the runner's drain (see t26)
-      val vecSrv = Similarity.ivfpqServedTrainRanks(s, d, 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.core.QueryCleanup.register(s, () => { vecSrv.unpersist(false); () })
-      rrfFuseRanks(rrfLexArmMemo(s, d), vecSrv)
+      // per call until the runner's drain (the fusion's TopK + final
+      // sort replay their input)
+      rrfFuseRanks(rrfLexArmMemo(s, d),
+        SessionScope.persist(Similarity.ivfpqServedTrainRanks(s, d, 10)))
     },
 
     // The served composition's RECALL CENSUS — the ablation every index
@@ -1762,18 +1559,11 @@ object TextAnalysis {
     // Engine-exact: both slates and both rank lists are integer-ranked
     // with total tie-breaks, so the intersections are exact set counts.
     "t30_served_fusion_recall" -> { (s, d) =>
-      import s.implicits._
       // lexical arm, exact slate and exact rank arm are the memoized
-      // session constants; shares t29's memoized index build; cleanup
-      // (served arm + served slate) deferred to the runner's drain
-      val (out, cleanup) = servedFusionRecallCore(
-        rrfLexArmMemo(s, d),
-        rrfExactSlateMemo(s, d).select($"eval_id", $"train_id"),
-        rrfVecExactMemo(s, d),
-        Similarity.ivfpqServedTrainRanks(s, d, 10),
+      // session constants; shares t29's memoized index build
+      servedFusionRecall(rrfLexArmMemo(s, d), rrfExactSlateMemo(s, d),
+        rrfVecExactMemo(s, d), Similarity.ivfpqServedTrainRanks(s, d, 10),
         embWithNorms(s, d))
-      graft.core.QueryCleanup.register(s, cleanup)
-      out
     },
 
     // The served composition's RANK-AWARE grading — the companion t30's
@@ -1785,21 +1575,10 @@ object TextAnalysis {
     // precomputed integer millionths (ndcgW — no cross-engine log), so
     // DCG and IDCG are exact BIGINT sums and the only doubles are two
     // guarded 6-dp-rounded divisions. Shares t29/t30's memoized index
-    // build and the one-per-session BM25 tokenization; cleanup deferred
-    // to the runner's drain (see t26).
+    // build and the one-per-session BM25 tokenization.
     "t31_ranking_metrics" -> { (s, d) =>
-      import s.implicits._
-      // memoized lexical arm + graded exact slate; shares t29's memoized
-      // index build; cleanup (served arm) deferred to the runner's drain
-      val (out, cleanup) = servedRankingMetricsCore(
-        rrfLexArmMemo(s, d),
-        rrfExactSlateMemo(s, d)
-          .select($"eval_id", $"train_id",
-            $"rank".cast("long").as("exact_rank")),
-        Similarity.ivfpqServedTrainRanks(s, d, 10),
-        embWithNorms(s, d))
-      graft.core.QueryCleanup.register(s, cleanup)
-      out
+      servedRankingMetrics(rrfLexArmMemo(s, d), rrfExactSlateMemo(s, d),
+        Similarity.ivfpqServedTrainRanks(s, d, 10), embWithNorms(s, d))
     },
 
     // PII detection + redaction census — the scrubbing pass every

@@ -607,12 +607,14 @@ class TextAnalysisSpec extends SparkSuite {
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
     val served = Seq((0L, 13L, 1L), (0L, 11L, 2L), (0L, 12L, 3L))
       .toDF("eval_id", "train_id", "vec_rank")
-    val (census, cleanup) = TextAnalysis.servedFusionRecallManaged(
-      docs.filter($"doc_id" % 100 === 0), post, emb, served)
+    val (lex, vecExact, exactSlate) = TextAnalysis.exactFusionArms(
+      docs.filter($"doc_id" % 100 === 0), post, emb)
+    val census = TextAnalysis.servedFusionRecall(
+      lex, exactSlate, vecExact, served, emb)
     val rows = census.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getDouble(5))).toList
-    cleanup()
+    graft.core.SessionScope.drain(spark)
     assert(rows == List(
       (0L, 5L, 4L, 0.8, 3L, 0.3),
       (100L, 1L, 1L, 0.2, 0L, 0.0),
@@ -653,12 +655,12 @@ class TextAnalysisSpec extends SparkSuite {
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
     val served = Seq((0L, 13L, 1L), (0L, 11L, 2L), (0L, 12L, 3L))
       .toDF("eval_id", "train_id", "vec_rank")
-    val (metrics, cleanup) = TextAnalysis.servedRankingMetricsManaged(
-      docs.filter($"doc_id" % 100 === 0), post, emb, served)
+    val (lex, _, exactSlate) = TextAnalysis.exactFusionArms(
+      docs.filter($"doc_id" % 100 === 0), post, emb)
+    val metrics = TextAnalysis.servedRankingMetrics(lex, exactSlate, served, emb)
     val rows = metrics.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5), r.getDouble(6))).toList
-    cleanup()
     assert(rows == List(
       (0L, 5L, 7908766L, 10271927L, 0.76994, 1L, 1.0),
       (100L, 5L, 5000000L, 10271927L, 0.486764, 1L, 1.0),
@@ -670,11 +672,10 @@ class TextAnalysisSpec extends SparkSuite {
     val perfect = Seq((400L, 13L, 1L), (400L, 12L, 2L), (400L, 11L, 3L),
       (400L, 2L, 4L), (400L, 1L, 5L), (400L, 3L, 6L))
       .toDF("eval_id", "train_id", "vec_rank")
-    val (m2, c2) = TextAnalysis.servedRankingMetricsManaged(
-      docs.filter($"doc_id" % 100 === 0), post, emb, perfect)
+    val m2 = TextAnalysis.servedRankingMetrics(lex, exactSlate, perfect, emb)
     val r400 = m2.collect().map(r => (r.getLong(0), r.getDouble(4),
       r.getDouble(6))).find(_._1 == 400L)
-    c2()
+    graft.core.SessionScope.drain(spark)
     assert(r400.contains((400L, 1.0, 1.0)),
       s"identical slate must grade ndcg = mrr = 1.0: $r400")
   }
@@ -713,15 +714,17 @@ class TextAnalysisSpec extends SparkSuite {
         .select(col("vec_id").as("query_id"), col("v"))
       val servedArm =
         Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10)
-      val (census, cleanup) = TextAnalysis.servedFusionRecallManaged(
-        probes, post, emb, servedArm)
+      val (lex, vecExact, exactSlate) =
+        TextAnalysis.exactFusionArms(probes, post, emb)
+      val census = TextAnalysis.servedFusionRecall(
+        lex, exactSlate, vecExact, servedArm, emb)
       // the full ablation a real swap ships: recall AND rank-aware
-      // metrics, re-graded per rebuild through their managed handles
-      val (metrics, mCleanup) = TextAnalysis.servedRankingMetricsManaged(
-        probes, post, emb, servedArm)
+      // metrics, re-graded per rebuild, then drained like a runner
+      val metrics = TextAnalysis.servedRankingMetrics(
+        lex, exactSlate, servedArm, emb)
       val rows = census.collect().map(_.toSeq).toList ++
         metrics.collect().map(_.toSeq).toList
-      cleanup(); mCleanup()
+      graft.core.SessionScope.drain(spark)
       assert(rows.nonEmpty, s"round $i graded no probes")
       if (i == 1) { firstRows = rows; baseline = persisted }
       else {
@@ -775,5 +778,37 @@ class TextAnalysisSpec extends SparkSuite {
     val gotSum4 = TextAnalysis.queries("t23_chunk_windows")(spark, dir)
       .filter($"doc_id" === 4).collect().head.getLong(4)
     assert(gotSum4 == want4, s"checksum $gotSum4 != hand-computed $want4")
+  }
+
+  test("leak census: t16 and t26-t31 leave no persist behind after a drain") {
+    // Every persist a catalog query makes must have an owner that
+    // releases it: the runner materializes the frame, then drains the
+    // session scope. With the shared session builds pre-warmed, one
+    // query + materialize + drain must leave NO new persistent RDD and
+    // NO new CacheManager entry (id/identity set difference — immune to
+    // the async ContextCleaner and to frames other specs left behind).
+    val cm = spark.sharedState.cacheManager
+    val cachedData = cm.getClass.getDeclaredField("cachedData")
+    cachedData.setAccessible(true)
+    def entries: Seq[AnyRef] =
+      cachedData.get(cm).asInstanceOf[IndexedSeq[AnyRef]].toList
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    TextAnalysis.bm25TfMemo(spark, sf)
+    TextAnalysis.rrfExactSlateMemo(spark, sf)
+    Similarity.ivfpqSaveTrainIndex(spark, sf)
+    Seq("t16_bm25_retrieval", "t26_hybrid_rerank", "t27_rerank_recall",
+        "t28_rrf_fusion", "t29_rrf_served", "t30_served_fusion_recall",
+        "t31_ranking_metrics").foreach { q =>
+      val rdds0 = persisted
+      val cache0 = entries
+      TextAnalysis.queries(q)(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      graft.core.SessionScope.drain(spark)
+      val newRdds = (persisted -- rdds0).toSeq.sorted
+      val newEntries = entries.filterNot(e => cache0.exists(_ eq e))
+      assert(newRdds.isEmpty && newEntries.isEmpty,
+        s"$q left persistent RDDs $newRdds and ${newEntries.size} " +
+          "CacheManager entries after the drain — a persist without an owner")
+    }
   }
 }

@@ -942,7 +942,7 @@ class StreamingParitySpec extends SparkSuite {
       .withColumn("nrm", Similarity.dot(col("v"), col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batch = TextAnalysis.hybridRerank(
-        TextAnalysis.bm25ProbeTerms(docs), post, emb)
+        TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(docs)), emb)
       .collect().map(_.toSeq).toSet
     assert(batch.nonEmpty, "batch reranked no probes at sf0.001")
     val root = Files.createTempDirectory("graft-t26-stream").toString
@@ -973,13 +973,13 @@ class StreamingParitySpec extends SparkSuite {
       .foreachBatch { (b: DataFrame, _: Long) =>
         if (!b.isEmpty) {
           batches += 1
-          // managed form: a long-running serving loop must unpersist the
-          // per-call intermediate frames once the batch is materialized,
+          // a long-running serving loop is its batches' runner: it must
+          // drain the per-call persists once the batch is materialized,
           // or they accumulate across micro-batches (r16 ADVICE)
-          val (df, cleanup) = TextAnalysis.hybridRerankManaged(
-            TextAnalysis.bm25ProbeTerms(b), post, emb)
-          val out = df.collect()
-          cleanup()
+          val out = TextAnalysis.hybridRerank(
+            TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(b)), emb)
+            .collect()
+          graft.core.SessionScope.drain(spark)
           served.synchronized { served ++= out.map(_.toSeq) }
           censusPerBatch.synchronized { censusPerBatch += persisted }
         }
@@ -1021,7 +1021,8 @@ class StreamingParitySpec extends SparkSuite {
       .persist(MEMORY_AND_DISK)
     val probes = docs.filter(col("doc_id") % 100 === 0)
     def rerank(p: DataFrame): Set[Seq[Any]] =
-      TextAnalysis.hybridRerank(TextAnalysis.bm25ProbeTerms(p), post, emb)
+      TextAnalysis.hybridRerank(
+          TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(p)), emb)
         .collect().map(_.toSeq).toSet
     val oneShot = rerank(probes)
     assert(oneShot.nonEmpty)
@@ -1092,7 +1093,7 @@ class StreamingParitySpec extends SparkSuite {
   test("RRF fusion serves arriving probe docs per micro-batch against the frozen index + embeddings (t28)") {
     // t28's serving form, same frame as the t26 twin: the sqrt-idf
     // impacts index and embedding table are FROZEN; probe documents
-    // arrive live and each micro-batch runs the identical rrfFusion
+    // arrive live and each micro-batch runs the identical rrfFuseRanks
     // definition. Both rank arms partition by eval_id — rank-space
     // fusion carries no cross-probe state at all (not even a
     // normalizer), so the union over any batching equals the one-shot
@@ -1106,14 +1107,17 @@ class StreamingParitySpec extends SparkSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", Similarity.dot(col("v"), col("v")))
       .persist(MEMORY_AND_DISK)
+    def fusion(p: DataFrame): DataFrame = TextAnalysis.rrfFuseRanks(
+      TextAnalysis.rrfLexArm(
+        TextAnalysis.probeScored(post, TextAnalysis.probeTermsOf(p))),
+      TextAnalysis.rrfVecArmBrute(p, emb))
     def fuse(p: DataFrame): Set[Seq[Any]] = {
-      // managed form everywhere a caller materializes-then-moves-on: the
+      // drain everywhere a caller materializes-then-moves-on: the
       // serving loop below runs one fusion per micro-batch and MUST
       // reclaim the per-call persisted frame (the r17 verdict's hygiene
-      // defect — rrfFusion used to persist with no handle)
-      val (df, cleanup) = TextAnalysis.rrfFusionManaged(p, post, emb)
-      val out = df.collect().map(_.toSeq).toSet
-      cleanup()
+      // defect — the fusion used to persist with no release)
+      val out = fusion(p).collect().map(_.toSeq).toSet
+      graft.core.SessionScope.drain(spark)
       out
     }
     // census by RDD-ID SET, not size: earlier suites leave abandoned
@@ -1129,16 +1133,15 @@ class StreamingParitySpec extends SparkSuite {
     // teeth for the no-growth census below: a materialized fusion MUST
     // visibly occupy the census until its cleanup runs — otherwise
     // "census never grew" would be vacuously true
-    val (teethDf, teethCleanup) = TextAnalysis.rrfFusionManaged(
-      docs.filter(col("doc_id") % 100 === 0), post, emb)
-    val oneShot = teethDf.collect().map(_.toSeq).toSet
+    val oneShot = fusion(docs.filter(col("doc_id") % 100 === 0))
+      .collect().map(_.toSeq).toSet
     val teethNew = persisted -- baseIds
     assert(teethNew.nonEmpty,
       "materialized fusion did not register a persistent RDD — the " +
         "no-growth census below has no teeth")
-    teethCleanup()
+    graft.core.SessionScope.drain(spark)
     assert((persisted & teethNew).isEmpty,
-      s"cleanup handle left fusion RDDs persisted: ${persisted & teethNew}")
+      s"the drain left fusion RDDs persisted: ${persisted & teethNew}")
     assert(oneShot.nonEmpty, "one-shot fusion produced no rows")
     val root = Files.createTempDirectory("graft-t28-stream").toString
     docs.filter(col("doc_id") % 100 === 0).repartition(3)
@@ -1246,7 +1249,7 @@ class StreamingParitySpec extends SparkSuite {
     // impacts index, the embedding table, and the saved IVF-PQ index
     // FILES are all static (built once, as a nightly job would); probe
     // documents arrive live and each micro-batch runs the identical
-    // rrfFusedWithArmManaged definition with the vector arm SERVED from
+    // rrfFuseRanks definition with the vector arm SERVED from
     // the files for exactly that batch's probes. Both arms rank per
     // probe and the serve is pure per-probe work against static files,
     // so the union over any probe batching equals the one-shot run —
@@ -1262,7 +1265,7 @@ class StreamingParitySpec extends SparkSuite {
       .persist(MEMORY_AND_DISK)
     val q29 = graft.SparkEntry.queries("t29_rrf_served")(spark, sf)
       .collect().map(_.toSeq).toSet
-    graft.core.QueryCleanup.drain(spark)
+    graft.core.SessionScope.drain(spark)
     // nightly build, MEMOIZED per (session, dataset) since r19: these
     // are the very frames/files the oracle-checked query above served
     // from — no rebuild, so the pre-r19 ordering hazard (an overwrite
@@ -1276,10 +1279,12 @@ class StreamingParitySpec extends SparkSuite {
       val probesVec = emb.join(broadcast(p.select(col("doc_id"))),
           col("vec_id") === col("doc_id"))
         .select(col("vec_id").as("query_id"), col("v"))
-      val (df, cleanup) = TextAnalysis.rrfFusedWithArmManaged(
-        p, post, Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
-      val out = df.collect().map(_.toSeq).toSet
-      cleanup()
+      val out = TextAnalysis.rrfFuseRanks(
+          TextAnalysis.rrfLexArm(
+            TextAnalysis.probeScored(post, TextAnalysis.probeTermsOf(p))),
+          Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
+        .collect().map(_.toSeq).toSet
+      graft.core.SessionScope.drain(spark)
       out
     }
     val probes = docs.filter(col("doc_id") % 100 === 0)
@@ -1356,7 +1361,7 @@ class StreamingParitySpec extends SparkSuite {
         col("bm25"), col("cos_sim"), col("blend"))
       .collect().map(_.toSeq).toSet
     val oneShot = norm(TextAnalysis.hybridRerank(
-      TextAnalysis.bm25ProbeTerms(docs), post, emb))
+      TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(docs)), emb))
     assert(oneShot.nonEmpty, "one-shot rerank produced no slate rows")
     // a probe's slate is immutable once served: the remerge just
     // deduplicates identical (eval, rank) rows a replay re-presents
@@ -1376,15 +1381,15 @@ class StreamingParitySpec extends SparkSuite {
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) {
             ExactlyOnceSink.pruneStages(root, id, b)
-            val (slate, cleanup) = TextAnalysis.hybridRerankManaged(
-              TextAnalysis.bm25ProbeTerms(b), post, emb)
+            val slate = TextAnalysis.hybridRerank(
+              TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(b)), emb)
             // capture batch 0's slate so the counterfactual below can
             // re-derive the naive replay without touching WAL internals
             if (id == 0 && armed)
               slate.write.mode("overwrite").parquet(root + "/b0_capture")
             val out = ExactlyOnceSink.applyBatch(
               root, id, slate, remerge, "eval_id")
-            cleanup()
+            graft.core.SessionScope.drain(spark)
             outcomes.synchronized { outcomes += ((id, out.toString)) }
             if (id == 0 && armed)
               throw new RuntimeException(
@@ -1444,7 +1449,7 @@ class StreamingParitySpec extends SparkSuite {
     // The r17 verdict's optional ask #6: with t26-through-ExactlyOnceSink
     // proven, the SECOND standard hybrid combiner gets the same
     // end-to-end treatment — per micro-batch of arriving probe docs, the
-    // managed rank fusion lands its slate in the partitioned ledger
+    // rank fusion lands its slate in the partitioned ledger
     // through ExactlyOnceSink; an injected crash in the post-sink/
     // pre-offset-commit window must leave the ledger equal to the
     // once-applied one-shot fusion. Rank-fusion slates are immutable per
@@ -1463,10 +1468,12 @@ class StreamingParitySpec extends SparkSuite {
       .select(col("eval_id").cast("long"), col("rank"), col("train_id"),
         col("lex_rank"), col("vec_rank"), col("rrf_fx"))
       .collect().map(_.toSeq).toSet
-    val (osDf, osCleanup) = TextAnalysis.rrfFusionManaged(
-      docs.filter(col("doc_id") % 100 === 0), post, emb)
-    val oneShot = norm(osDf)
-    osCleanup()
+    def fusion(p: DataFrame): DataFrame = TextAnalysis.rrfFuseRanks(
+      TextAnalysis.rrfLexArm(
+        TextAnalysis.probeScored(post, TextAnalysis.probeTermsOf(p))),
+      TextAnalysis.rrfVecArmBrute(p, emb))
+    val oneShot = norm(fusion(docs.filter(col("doc_id") % 100 === 0)))
+    graft.core.SessionScope.drain(spark)
     assert(oneShot.nonEmpty, "one-shot fusion produced no slate rows")
     // a probe's fused slate is immutable once served: the remerge just
     // deduplicates identical rows a replay re-presents
@@ -1486,12 +1493,12 @@ class StreamingParitySpec extends SparkSuite {
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) {
             ExactlyOnceSink.pruneStages(root, id, b)
-            val (slate, cleanup) = TextAnalysis.rrfFusionManaged(b, post, emb)
+            val slate = fusion(b)
             if (id == 0 && armed)
               slate.write.mode("overwrite").parquet(root + "/b0_capture")
             val out = ExactlyOnceSink.applyBatch(
               root, id, slate, remerge, "eval_id")
-            cleanup()
+            graft.core.SessionScope.drain(spark)
             outcomes.synchronized { outcomes += ((id, out.toString)) }
             if (id == 0 && armed)
               throw new RuntimeException(
@@ -1552,7 +1559,7 @@ class StreamingParitySpec extends SparkSuite {
     // t29 is the composition a real deployment actually runs (the
     // vector arm served from the SAVED IVF-PQ index files), and its
     // slates are equally immutable per probe, so the same remerge-dedup
-    // applies. Per micro-batch of arriving probe docs, the managed
+    // applies. Per micro-batch of arriving probe docs, the
     // served fusion lands its slate in the partitioned ledger through
     // ExactlyOnceSink; an injected crash in the post-sink/pre-offset-
     // commit window must leave the ledger equal to the once-applied
@@ -1569,21 +1576,22 @@ class StreamingParitySpec extends SparkSuite {
     // nightly build, memoized per (session, dataset): the same frames/
     // files every other t29 consumer in this session serves from
     val (cbR, encR) = Similarity.ivfpqSaveTrainIndex(spark, sf)
-    def servedFusion(p: DataFrame): (DataFrame, () => Unit) = {
+    def servedFusion(p: DataFrame): DataFrame = {
       val probesVec = emb.join(broadcast(p.select(col("doc_id"))),
           col("vec_id") === col("doc_id"))
         .select(col("vec_id").as("query_id"), col("v"))
-      TextAnalysis.rrfFusedWithArmManaged(
-        p, post, Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
+      TextAnalysis.rrfFuseRanks(
+        TextAnalysis.rrfLexArm(
+          TextAnalysis.probeScored(post, TextAnalysis.probeTermsOf(p))),
+        Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
     }
     def norm(df: DataFrame): Set[Seq[Any]] = df
       .select(col("eval_id").cast("long"), col("rank"), col("train_id"),
         col("lex_rank"), col("vec_rank"), col("rrf_fx"))
       .collect().map(_.toSeq).toSet
     val probes = docs.filter(col("doc_id") % 100 === 0)
-    val (osDf, osCleanup) = servedFusion(probes)
-    val oneShot = norm(osDf)
-    osCleanup()
+    val oneShot = norm(servedFusion(probes))
+    graft.core.SessionScope.drain(spark)
     assert(oneShot.nonEmpty, "one-shot served fusion produced no slate rows")
     // a probe's served slate is immutable once fused: the remerge just
     // deduplicates identical rows a replay re-presents
@@ -1602,12 +1610,12 @@ class StreamingParitySpec extends SparkSuite {
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) {
             ExactlyOnceSink.pruneStages(root, id, b)
-            val (slate, cleanup) = servedFusion(b)
+            val slate = servedFusion(b)
             if (id == 0 && armed)
               slate.write.mode("overwrite").parquet(root + "/b0_capture")
             val out = ExactlyOnceSink.applyBatch(
               root, id, slate, remerge, "eval_id")
-            cleanup()
+            graft.core.SessionScope.drain(spark)
             outcomes.synchronized { outcomes += ((id, out.toString)) }
             if (id == 0 && armed)
               throw new RuntimeException(

@@ -51,7 +51,7 @@ fi
 
 echo "=== gate 4/4: Bench @ sf0.1 -> accept-gate dry-run (round r$N) ==="
 echo "    (pre-run load: $(uptime))"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' \
   > /tmp/round_check_bench.json || exit 4
 python3 tools/accept_bench_record.py /tmp/round_check_bench.json \
